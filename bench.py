@@ -1,259 +1,383 @@
-"""Benchmark runner — times the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""The repository's timing script: times declared queries in one Spark
+session (local[$SPARK_GRAFT_CPUS]) over the tables in $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data).
 
-Prints per-query human-readable lines, writes the full per-query
-timing map to BENCH_DETAIL.json (repo root), and ends with ONE SHORT
-machine-readable JSON line (total + count + sf + the slowest queries):
-the driver captures only the stdout TAIL, so the final line must stay
-well under its capture window — round 4's single 104-entry line
-overflowed it and the formal bench gate got `parsed: null`.
+    python bench.py                          # headline run
+    python bench.py --only NAME... [--runs N] [--plans DIR]
+    python bench.py --scale N [--emb-scale M] [--only NAME...] [--runs N]
 
-Query choice notes:
-- `dedup_jaccard` re-entered the headline set in round 3: the query now
-  runs the max_df-pruned candidate+verify path (tokens in >50% of docs
-  leave the inverted index; pairs are exactly re-verified), which is
-  the form you'd run at scale and is no longer degenerate on the
-  shared-vocabulary synthetic corpus.
-- `streaming_dedup_ingest` is a wall-clock micro-bench of the
-  Structured Streaming exact-dedup stage (file-source micro-batches →
-  dropDuplicatesWithinWatermark → noop sink, availableNow), so state
-  store growth/regression shows up as time per round.
+Headline run: every declared query, min of `--runs` (default 2) passes,
+plus the streaming exact-dedup extra. It writes the per-query detail
+(wall, jobs, stages, task time, task CPU, host system+steal) to
+BENCH_DETAIL_run.json — or, when SPARK_GRAFT_BENCH_SOURCE names a
+deliberate floor run, to the committed BENCH_DETAIL.json — and ends
+with ONE short JSON line: harnesses that keep only the stdout tail
+parse it, so that line must stay well under their capture window.
+
+`--only` times just the named queries (no streaming extra); `--plans
+DIR` also writes each query's formatted physical plan to DIR/NAME.txt.
+
+`--scale N` first builds a deterministic ×N corpus (`build_corpus`) in
+a temporary directory and times the heavy LLM-pipeline queries
+(`SCALE_QUERIES`, or `--only`) there; its last line is one JSON record
+of the scale run. Run it at SPARK_GRAFT_CPUS=32 and =8 for core-scaling
+evidence.
+
+Every timing goes through `measure`: one job group per timed run, so
+jobs, stages and task metrics come from exactly that run's jobs.
 """
 
 from __future__ import annotations
 
+import argparse
+import hashlib
 import json
 import os
+import re
+import shutil
 import sys
+import tempfile
 import time
+import uuid
+from contextlib import contextmanager
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from py4j.protocol import Py4JJavaError
 
-# The headline set is the full declared registry (packs included —
-# each pack times its whole member family in one plan), in declaration
-# order. Keeping it dynamic means consolidations and new queries flow
-# into the bench without a second roster to maintain; floors in
-# BASELINE.md are keyed by the same names.
-def headline_queries(qs: dict) -> list[str]:
-    return list(qs)
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+from perfbench.procstat import contention, host_ledger  # noqa: E402
+from perfbench.trace import StatusReader  # noqa: E402
+
+OFFSET = 1_000_000
+
+# dedup_jaccard is deliberately NOT in the scale set: its fractional
+# max_df prune is corpus-relative (tokens in > 50% of docs leave the
+# inverted index), and the synthetic sf0.1 vocabulary is 31 tokens ALL
+# at ~78% df — every copy-salting scheme halves each df FRACTION per
+# corpus doubling, un-prunes the entire stopword set, and the posting
+# self-join goes quadratic in the DATA (measured 245 s at scale 2),
+# which measures the degenerate vocabulary, not the engine. Its
+# candidate+verify kernels are covered at scale by curation_funnel and
+# sim_pair_pack's dedup_minhash_lsh member (MinHash banding carries no
+# df prune, and salted copies keep its pair volume linear).
+SCALE_QUERIES = [
+    "curation_funnel", "sim_pair_pack", "text_doc_pack", "mm_pack",
+    "contam_chunk_pack", "text_bigram_ppl", "dedup_cluster_pack",
+    "text_contam_bloom",
+]
+
+def build_corpus(scale: int, out_dir: str, src_dir: str,
+                 emb_scale: int | None = None) -> int:
+    """Deterministic ×scale documents/embeddings of `src_dir` under
+    out_dir; other tables symlinked. Returns the scaled document count.
+
+    Work grows linearly, not quadratically, with scale — the point is
+    to measure the ENGINE's scaling, not to square the near-dup graph:
+
+    - documents: copy k shifts doc_id by k·OFFSET and salts every token
+      with an alphabetic per-copy suffix, so vocabularies are disjoint
+      across copies and every near-dup / contamination / LSH structure
+      repeats WITHIN each copy.
+    - embeddings: copy k flips each dimension's sign by a deterministic
+      md5-parity mask. Within a copy every pairwise cosine is exactly
+      the original (cos(v⊙s, w⊙s) = cos(v, w)); across copies the
+      masked cosines scatter around 0, below the operators' thresholds
+      except for a bounded tail. They scale separately (`emb_scale`)
+      because the exact all-pairs GEMM members are quadratic in rows by
+      design.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(os.path.join(src_dir, "documents.parquet"))
+    emb = pq.read_table(os.path.join(src_dir, "embeddings.parquet"))
+
+    tok_re = re.compile(r"(\S+)")
+    doc_chunks = []
+    for k in range(scale):
+        if k == 0:
+            texts = docs["text"]
+        else:
+            salt = "z" + chr(ord("a") + (k - 1) % 26)
+            texts = pa.array(
+                [None if t is None else tok_re.sub(r"\g<1>" + salt, t)
+                 for t in docs["text"].to_pylist()])
+        doc_chunks.append(pa.table({
+            "doc_id": pa.array(np.asarray(docs["doc_id"]) + k * OFFSET,
+                               type=pa.int64()),
+            "text": texts,
+            "lang": docs["lang"], "source": docs["source"],
+            "n_chars": docs["n_chars"]}))
+    big_docs = pa.concat_tables(doc_chunks)
+    # many row groups → the scans split across cores like a real table
+    pq.write_table(big_docs, os.path.join(out_dir, "documents.parquet"),
+                   row_group_size=2048)
+
+    vecs = np.stack([np.asarray(v, dtype=np.float32)
+                     for v in emb["embedding"].to_pylist()])
+    dim = vecs.shape[1]
+    emb_chunks = []
+    for k in range(emb_scale if emb_scale is not None else scale):
+        if k == 0:
+            m = vecs
+        else:
+            mask = np.asarray([
+                1.0 if int(hashlib.md5(f"{k}_{i}".encode())
+                           .hexdigest()[:8], 16) % 2 == 0 else -1.0
+                for i in range(dim)], dtype=np.float32)
+            m = vecs * mask
+        emb_chunks.append(pa.table({
+            "vec_id": pa.array(np.asarray(emb["vec_id"]) + k * OFFSET,
+                               type=pa.int64()),
+            "embedding": pa.array(list(m), type=pa.list_(pa.float32())),
+            "label": emb["label"]}))
+    pq.write_table(pa.concat_tables(emb_chunks),
+                   os.path.join(out_dir, "embeddings.parquet"),
+                   row_group_size=1024)
+
+    for f in os.listdir(src_dir):
+        if f.endswith(".parquet") and f not in ("documents.parquet",
+                                                "embeddings.parquet"):
+            os.symlink(os.path.join(src_dir, f), os.path.join(out_dir, f))
+    return big_docs.num_rows
 
 
-def bench_streaming_dedup(spark, sf_dir: str) -> float:
-    """Time the streaming exact-dedup stage over the documents table
-    re-shipped as 8 parquet micro-batch files (2 files per trigger,
-    availableNow): measures source listing + state-store insert/lookup +
-    watermark bookkeeping, not sink IO."""
-    import shutil
-    import tempfile
+def evaluate(df, name: str) -> int:
+    """Force evaluation of EVERY output column: count(xxhash64(all
+    columns)). A bare count() lets Catalyst prune unevaluated
+    projections, so map-only queries would time column-pruned scans.
+    xxhash64 is JVM codegen over any column type; its cost is noise next
+    to the expressions it forces."""
+    from pyspark.sql import functions as F
 
+    if name == "sim_cosine_topk":
+        return len(df.collect())
+    return df.agg(F.count(F.xxhash64(*df.columns))).first()[0]
+
+
+def _stage(reader: StatusReader, stage_id: int) -> dict | None:
+    """The stage's record, or None once the status store has evicted it
+    (past `spark.ui.retainedStages`) — only an earlier run's stage, which
+    a job can still list as a skipped parent, is that old."""
+    try:
+        return reader.stage(stage_id)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() \
+                != "java.util.NoSuchElementException":
+            raise
+        return None
+
+
+def measure(spark, reader: StatusReader, label: str, run) -> dict:
+    """Call `run()` under a job group of its own and time it.
+
+    Returns wall seconds, `run()`'s result (`out`), the group's job and
+    stage counts, executor task run time and task CPU of the stages the
+    group ran (CPU excludes hypervisor steal, GC and fetch wait — the
+    steal-robust work record), and host system+steal CPU-seconds over
+    the call (ambient contention, not engine work)."""
+    sc = spark.sparkContext
+    group = f"bench-{label}-{uuid.uuid4().hex}"
+    h0 = host_ledger()
+    epoch0 = time.time()
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    t0 = time.perf_counter()
+    try:
+        out = run()
+        wall = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    h1 = host_ledger()
+    reader.drain()
+    jobs = reader.jobs_in_group(group)
+    stage_ids = {s for j in jobs for s in reader.job(j)["stageIds"]}
+    # a job lists the parent stages it skipped, including ones an
+    # earlier run computed: count only stages this run executed
+    stages = [st for st in (_stage(reader, s) for s in stage_ids)
+              if st is not None and st["status"] != "SKIPPED"
+              and (st["submissionTime"] or 0) >= epoch0 * 1000 - 1]
+    return {"wall_s": round(wall, 3), "out": out, "jobs": len(jobs),
+            "stages": len(stages),
+            "task_time_s": round(
+                sum(st["executorRunTime"] for st in stages) / 1e3, 1),
+            "task_cpu_s": round(
+                sum(st["executorCpuTime"] for st in stages) / 1e9, 1),
+            "host_sys_steal_s": round(
+                contention(h0, h1)["host_steal_sys_s"], 1)}
+
+
+@contextmanager
+def stream_dedup(spark, sf_dir: str):
+    """The streaming exact-dedup extra: yields a call that drains the
+    documents table, re-shipped as 8 parquet micro-batch files (2 per
+    trigger, availableNow), through dropDuplicatesWithinWatermark into a
+    noop sink — source listing, state-store insert/lookup and watermark
+    bookkeeping, not sink IO."""
     from pyspark.sql import functions as F
 
     from error_analysis_spark.streaming import dedup as SD
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    src = (docs.select(
-        "doc_id", "text",
-        (docs.doc_id % 4).cast("string").alias("source"),
+    src = docs.select(
+        "doc_id", "text", (docs.doc_id % 4).cast("string").alias("source"),
         F.timestamp_seconds(F.lit(1_700_000_000) + docs.doc_id % 3600)
-        .alias("ingest_time")))
+        .alias("ingest_time"))
     tmp = tempfile.mkdtemp(prefix="bench_stream_")
-    # Round 12 (VERDICT r11 #5, guide §2.2 "fewer, larger partitions"):
-    # the stream's dedup state is a few thousand hashes, but the state
-    # store inherited the session's core-count-derived shuffle default
-    # (32) — 4 triggers × 32 state-store commits of ~150 rows each,
-    # pure per-commit overhead, and the reason this extra read FASTER
-    # at 8 cores (8 state partitions) than at 32. State partitions are
-    # sized to STATE VOLUME, not core count — a production dedup state
-    # of billions of hashes sets this high via the env override. A/B
-    # (same files, same 2-file triggers, same watermark — ingest
-    # semantics identical, every duplicate still crosses trigger
-    # boundaries through the state store): warm 4.3-4.4 s at 32 state
-    # partitions → 2.0-2.5 s at 8. Documented as an explicit bench
-    # measurement change in OPTIMIZATION_r12.md.
+    # State partitions are sized to STATE VOLUME (a few thousand hashes
+    # here), not to the core-count-derived shuffle default: at 32 they
+    # are pure per-commit overhead (OPTIMIZATION_r12.md). A production
+    # dedup state of billions of hashes sets this high.
     state_parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src.repartition(8).write.mode("overwrite").parquet(tmp + "/in")
-        t0 = time.perf_counter()
+
+    def run():
         spark.conf.set("spark.sql.shuffle.partitions", state_parts)
         stream = SD.stream_documents(spark, tmp + "/in",
                                      max_files_per_trigger=2)
-        kept = SD.stream_dedup_exact(stream)
-        q = (kept.writeStream.format("noop")
+        q = (SD.stream_dedup_exact(stream).writeStream.format("noop")
              .option("checkpointLocation", tmp + "/ckpt")
              .trigger(availableNow=True).start())
         q.awaitTermination()
-        return round(time.perf_counter() - t0, 3)
+    try:
+        src.repartition(8).write.mode("overwrite").parquet(tmp + "/in")
+        yield run
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from error_analysis_spark.session import get_spark
+def parse_args(argv=None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Time declared queries (see the module docstring).")
+    ap.add_argument("--only", nargs="+", metavar="NAME",
+                    help="time only these declared queries")
+    ap.add_argument("--runs", type=int, default=2,
+                    help="timed runs per query; the minimum is reported")
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write each query's formatted plan to DIR/NAME.txt")
+    ap.add_argument("--scale", type=int, metavar="N",
+                    help="time SCALE_QUERIES on a deterministic ×N corpus")
+    ap.add_argument("--emb-scale", type=int, metavar="M",
+                    help="embedding copies of the ×N corpus (default N)")
+    args = ap.parse_args(argv)
+    if args.emb_scale is not None and args.scale is None:
+        ap.error("--emb-scale needs --scale")
+    if args.runs < 1:
+        ap.error("--runs must be at least 1")
+    return args
+
+
+def time_queries(args, sf_dir: str, default_names: list[str] | None):
+    """Start the session and time each query `args.runs` times, passes
+    outer. Returns (spark, reader, best record per query, total host
+    system+steal seconds over every timed run)."""
     import __spark_entry__ as entry_mod
+    from error_analysis_spark.session import get_spark
 
-    spark = get_spark("bench")
     qs = entry_mod.queries()
-    timings: dict[str, float] = {}
-    # Ambient-contention ledger (round 10): this box is a VM, and the
-    # funnel's bimodal slow runs were root-caused to guest-kernel
-    # system time + hypervisor STEAL, not engine work (BASELINE.md
-    # round-10 adjudication: guest user CPU flat 67-101 core-s across
-    # 15 identical runs while the 215 s outlier carried system=2133 s
-    # + steal=1228 s). Per-query host deltas let the reader of a bench
-    # artifact tell a real regression from a contended window.
-    host_sys_steal: dict[str, float] = {}
-    # Per-query executor TASK-TIME totals (round 12, VERDICT r11 #7):
-    # wall-clock core-scaling is unmeasurable on this host (every
-    # 32-vCPU run accrues thousands of core-s of hypervisor steal
-    # while 8-vCPU runs see ~one tenth of it — ledgers in SCALE_r12.md)
-    # — task-seconds are the steal-robust record of how much parallel
-    # work a query actually schedules, and a task-time reduction is the
-    # scale-relevant effect of an optimization even when wall-clock is
-    # fixed-cost-bound at sf0.1. Recorded in BENCH_DETAIL only
-    # (additions-only contract).
-    task_time: dict[str, float] = {}
-    task_cpu: dict[str, float] = {}
-
-    def host_stat() -> dict:
-        try:
-            with open("/proc/stat") as f:
-                p = f.readline().split()
-            return {"user": int(p[1]), "system": int(p[3]),
-                    "steal": int(p[8])}
-        except Exception:
-            return {}
-
-    _store = spark._jsparkSession.sparkContext().statusStore()
-    _gw = spark.sparkContext._gateway
-    _empty = spark._jvm.java.util.Collections.emptyList()
-    _darr = _gw.new_array(_gw.jvm.double, 0)
-
-    def task_time_ms() -> int:
-        # sum of task RUN times across stages (includes steal/GC —
-        # pair with task_cpu_s below to separate work from contention)
-        try:
-            stages = _store.stageList(_empty, False, False, _darr, _empty)
-            return sum(stages.apply(i).executorRunTime()
-                       for i in range(stages.size()))
-        except Exception:
-            return 0
-
-    def task_cpu_ns() -> int:
-        # executor CPU nanoseconds across all stages: unlike task
-        # DURATION this excludes hypervisor steal / GC / fetch wait,
-        # so it is the steal-robust per-query work record
-        try:
-            stages = _store.stageList(_empty, False, False, _darr, _empty)
-            return sum(stages.apply(i).executorCpuTime()
-                       for i in range(stages.size()))
-        except Exception:
-            return 0
-
-    def evaluate(df) -> int:
-        """Force evaluation of EVERY output column: count(xxhash64(all
-        columns)) — a bare count() lets Catalyst prune unevaluated
-        projections, so map-only queries (text_normalize,
-        curation_split, layout_zorder, …) degenerated to column-pruned
-        scans and the bench overstated their throughput (VERDICT r05).
-        xxhash64 is JVM codegen over any column type; its cost is noise
-        next to the expressions it forces."""
-        from pyspark.sql import functions as F
-        return df.agg(F.count(F.xxhash64(*[
-            F.col(c) for c in df.columns]))).first()[0]
-
+    names = args.only or default_names or list(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+    spark = get_spark("bench")
+    reader = StatusReader(spark)
     # warm the JVM + parquet footers with the cheapest query
     qs["a8_rms"](spark, sf_dir).collect()
-    # Two passes, report min per query: first-run numbers in local mode are
-    # dominated by one-time whole-stage-codegen compilation and JIT warm-up,
-    # which a long-lived cluster amortizes away; min-of-2 is the steady state.
-    for _pass in range(2):
-        for name in headline_queries(qs):
-            if name not in qs:
-                continue
-            h0 = host_stat()
-            tt0 = task_time_ms()
-            tc0 = task_cpu_ns()
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            n = (evaluate(df) if name not in ("sim_cosine_topk",)
-                 else len(df.collect()))
-            dt = round(time.perf_counter() - t0, 3)
-            if h0:
-                h1 = host_stat()
-                ss = round((h1["system"] - h0["system"]
-                            + h1["steal"] - h0["steal"]) / 100.0, 1)
-                # keep the contamination reading of the pass that
-                # produced the reported (min) timing
-                if name not in timings or dt <= timings[name]:
-                    host_sys_steal[name] = ss
-                    task_time[name] = round(
-                        (task_time_ms() - tt0) / 1000.0, 1)
-                    task_cpu[name] = round(
-                        (task_cpu_ns() - tc0) / 1e9, 1)
-            timings[name] = min(timings.get(name, dt), dt)
-            _ = n
-    # one-shot streaming micro-bench (its own checkpoint each run, so
-    # min-of-2 double-counts listing; a single availableNow drain is
-    # the steady-state shape). Reported SEPARATELY from the headline
-    # total (VERDICT r08 #4): as a single unattended wall-clock read
-    # dominated by fixed trigger scheduling it swings 0.8→20 s with
-    # ambient load and has no per-query floor obligation — letting it
-    # into the total let one noisy extra dominate the round-over-round
-    # delta. The headline total is now exactly the declared registry.
-    extras = {"streaming_dedup_ingest": bench_streaming_dedup(spark, sf_dir)}
+    # Report the min per query: first-run numbers in local mode are
+    # dominated by one-time whole-stage-codegen compilation and JIT
+    # warm-up, which a long-lived cluster amortizes away.
+    best: dict[str, dict] = {}
+    ambient = 0.0
+    for r in range(args.runs):
+        for name in names:
+            def run(name=name):
+                df = qs[name](spark, sf_dir)
+                evaluate(df, name)
+                return df
+            rec = measure(spark, reader, name, run)
+            ambient += rec["host_sys_steal_s"]
+            print(f"# {name} run{r}: {rec['wall_s']} s, jobs={rec['jobs']}"
+                  f" stages={rec['stages']} task_cpu_s={rec['task_cpu_s']}",
+                  flush=True)
+            if args.plans and r == args.runs - 1:
+                df = rec["out"]
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
+                    fh.write(df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"))
+            # keep the record (and its contamination reading) of the
+            # pass that produced the reported minimum
+            if name not in best or rec["wall_s"] <= best[name]["wall_s"]:
+                best[name] = rec
+    return spark, reader, best, ambient
+
+
+def main(argv=None) -> None:
+    args = parse_args(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if args.scale:
+        with tempfile.TemporaryDirectory(
+                prefix=f"spark_graft_scale{args.scale}_") as scale_dir:
+            n_docs = build_corpus(args.scale, scale_dir, sf_dir,
+                                  args.emb_scale)
+            spark, _, best, ambient = time_queries(args, scale_dir,
+                                                   SCALE_QUERIES)
+            timings = {n: rec["wall_s"] for n, rec in best.items()}
+            print(json.dumps({
+                "cpus": spark.sparkContext.defaultParallelism,
+                "scale": args.scale,
+                "emb_scale": args.emb_scale or args.scale,
+                "n_docs": n_docs,
+                "total_min_sec": round(sum(timings.values()), 3),
+                "queries": timings,
+                "task_time_s": {n: b["task_time_s"] for n, b in best.items()},
+                "task_cpu_s": {n: b["task_cpu_s"] for n, b in best.items()},
+                "ambient_sys_steal_s": round(ambient, 1)}))
+            spark.stop()
+        return
+
+    spark, reader, best, _ = time_queries(args, sf_dir, None)
+    timings = {n: rec["wall_s"] for n, rec in best.items()}
+    # One drain per run (its own checkpoint each time, so min-of-2 would
+    # double-count listing). Reported outside the headline total: as a
+    # single wall-clock read dominated by fixed trigger scheduling it
+    # swings with ambient load, and the total is exactly the registry.
+    extras = {}
+    if not args.only:
+        with stream_dedup(spark, sf_dir) as run:
+            extras["streaming_dedup_ingest"] = measure(
+                spark, reader, "streaming_dedup_ingest", run)["wall_s"]
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
-    # full per-query map: one human line each + a committed detail file
-    for name, dt in timings.items():
-        print(f"# {name}: {dt}")
-    for name, dt in extras.items():
-        print(f"# {name}: {dt} (extra, outside headline total)")
-    # Provenance (VERDICT r07 #7): unattended runs (the driver's
-    # per-round bench) must not silently shadow the COMMITTED builder
-    # detail in place — they write to BENCH_DETAIL_run.json
-    # (gitignored) instead. The builder's deliberate floor runs set
-    # SPARK_GRAFT_BENCH_SOURCE (e.g. "builder min-of-3, quiesced") and
-    # land in BENCH_DETAIL.json; both carry a `source` field.
+    # Unattended runs write BENCH_DETAIL_run.json (gitignored) and never
+    # shadow the committed detail; deliberate floor runs name their
+    # provenance in SPARK_GRAFT_BENCH_SOURCE and land in BENCH_DETAIL.json.
     src = os.environ.get("SPARK_GRAFT_BENCH_SOURCE")
     detail_name = "BENCH_DETAIL.json" if src else "BENCH_DETAIL_run.json"
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               detail_name)
-    ambient_total = round(sum(host_sys_steal.values()), 1)
-    with open(detail_path, "w") as fh:
+
+    def per_query(key):
+        return {n: rec[key] for n, rec in best.items()}
+    with open(os.path.join(ROOT, detail_name), "w") as fh:
         json.dump({"metric": "headline_total_sec", "value": total,
                    "unit": "sec", "sf": sf_val, "n_queries": len(timings),
                    "source": src or "unattended single run "
                    "(not a committed floor)",
                    "queries": timings, "extras": extras,
-                   # host system+steal CPU-seconds during each query's
-                   # reported pass — ambient-contention evidence, see
-                   # BASELINE.md round-10 adjudication
-                   "host_sys_steal_s": host_sys_steal,
-                   # executor task-seconds (duration) and executor
-                   # CPU-seconds during the reported (min) pass — the
-                   # CPU figure excludes steal/GC/fetch-wait and is
-                   # the steal-robust per-query work record
-                   "task_time_s": task_time,
-                   "task_cpu_s": task_cpu}, fh,
+                   "host_sys_steal_s": per_query("host_sys_steal_s"),
+                   "jobs": per_query("jobs"), "stages": per_query("stages"),
+                   "task_time_s": per_query("task_time_s"),
+                   "task_cpu_s": per_query("task_cpu_s")}, fh,
                   indent=1, sort_keys=True)
-    # final machine line LAST (driver tail-captures stdout): total +
-    # count + sf + the 5 slowest queries in `queries` (unchanged shape,
-    # round-over-round comparable) PLUS — round 12, VERDICT r11 #2 —
-    # `detail_inline`, the COMPLETE per-query map at 2-decimal
-    # precision, so the PERF comparator sees all ~102 names instead of
-    # 4 common ones and never mislabels a top-5 dropout as
-    # "dropped_from_bench". Additions-only; the whole line measures
-    # ~3.0 KB (round 4's overflow line carried full-precision floats —
-    # the r11 driver tail held 3.6 KB, so this stays inside the
-    # capture window, and `queries`/3-decimal detail stay available in
-    # BENCH_DETAIL*.json).
+    # final machine line LAST (read from the stdout tail): the 5
+    # slowest in `queries` plus the complete per-query map at 2-decimal
+    # precision in `detail_inline` (~3 KB, inside the capture window).
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
     print(json.dumps({
         "metric": "headline_total_sec",
@@ -263,7 +387,8 @@ def main() -> None:
         "sf": sf_val,
         "n_queries": len(timings),
         "extras": extras,
-        "ambient_sys_steal_s": ambient_total,
+        "ambient_sys_steal_s": round(
+            sum(per_query("host_sys_steal_s").values()), 1),
         "detail": detail_name,
         "detail_inline": {k: round(v, 2) for k, v in timings.items()},
     }))

@@ -128,16 +128,18 @@ def curate_documents(docs: DataFrame, cfg: CurationConfig | None = None,
     # three observations collect there. minhash_dedup's eager count —
     # the pinned-input release barrier of rounds 8-10 — is untouched;
     # only the funnel's own counting wave is removed.
-    pairs = DD.minhash_dedup(s3, text_col, id_col, cfg.num_perm,
-                             cfg.bands, cfg.near_dup_threshold)
+    pairs, n_pairs = DD._minhash_pairs(s3, text_col, id_col, cfg.num_perm,
+                                       cfg.bands, cfg.near_dup_threshold)
     n0, n1 = (obs12.get["n0"], obs12.get["n1"])  # the observed counts
     n2 = obs2.get["n2"]
     n3 = obs3.get["n3"]
     vertices = s3.select(F.col(id_col).alias("id"))
     # edges_ready: minhash_dedup's pair list is distinct by
     # construction (candidates are distinct, verify joins are 1:1) and
-    # persisted+counted — CC skips its dedup shuffle + checkpoint copy
-    comp = DD.connected_components(pairs, vertices, edges_ready=True)
+    # persisted+counted — CC skips its dedup shuffle + checkpoint copy,
+    # and its threshold probe reuses the count
+    comp = DD.connected_components(pairs, vertices, edges_ready=True,
+                                   known_edge_count=n_pairs)
     # connected_components checkpoints its labels eagerly, so the
     # (possibly corpus-scale) verified pair cache releases here
     pairs.unpersist()

@@ -413,6 +413,15 @@ def lsh_candidate_pairs(signatures: DataFrame, num_perm: int = 32,
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   num_perm: int = 32, bands: int = 8,
                   threshold: float = 0.5) -> DataFrame:
+    """Full MinHash-LSH near-dup pairs (id_a, id_b, jaccard); see
+    `_minhash_pairs`, which also returns the pair count."""
+    return _minhash_pairs(df, text_col, id_col, num_perm, bands,
+                          threshold)[0]
+
+
+def _minhash_pairs(df: DataFrame, text_col: str, id_col: str,
+                   num_perm: int, bands: int,
+                   threshold: float) -> tuple[DataFrame, int]:
     """Full MinHash-LSH near-dup: signatures → banded candidates → exact
     Jaccard verification of candidates only. Uses the row-local banded
     form, so the first exchange in the whole pipeline is the candidate
@@ -427,7 +436,10 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     sf0.1 on the funnel's dense synthetic graph). So both inputs are
     pinned, the verified pair list materializes eagerly into its own
     persisted DataFrame, the inputs release HERE, and the caller owns
-    the result's release via the standard `result.unpersist()`."""
+    the result's release via the standard `result.unpersist()`.
+
+    Returns (pairs, pair count): the eager count that materializes the
+    pair list, for `connected_components(known_edge_count=)`."""
     # with_set_size (round 11): the banded frame carries each doc's
     # distinct-token count so the provable length guard prunes
     # candidates AT THE BAND JOIN, before the candidate-dedup exchange
@@ -462,11 +474,7 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_pairs = result.count()  # last consumer of the pins → release them
     banded.unpersist()
     tok_arr.unpersist()
-    # round 12: the eager count above already materialized the pair
-    # list; stash it so connected_components(edges_ready=True) callers
-    # skip their own edge-count job over the cache (one fewer wave).
-    result._graft_materialized_count = n_pairs
-    return _track(result)
+    return _track(result), n_pairs
 
 
 def _verify_jaccard(cands: DataFrame, tok_arr: DataFrame,
@@ -509,7 +517,8 @@ def _verify_jaccard(cands: DataFrame, tok_arr: DataFrame,
 def connected_components(pairs: DataFrame, vertices: DataFrame,
                          max_iter: int = 25,
                          local_threshold: int = 4_000_000,
-                         edges_ready: bool = False) -> DataFrame:
+                         edges_ready: bool = False,
+                         known_edge_count: int | None = None) -> DataFrame:
     """Near-dup clusters via hash-min label propagation: every vertex
     starts labeled with its own id; each iteration pushes the min label
     across edges until fixpoint. Output: (id, component) with component
@@ -553,13 +562,11 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     # probe + collect would re-execute them per consumer.
     und = (pairs.select("id_a", "id_b") if edges_ready
            else pairs.select("id_a", "id_b").distinct().localCheckpoint())
-    # round 12: an edges_ready caller whose pair list was materialized
-    # by an eager count can hand that count over (the
-    # `_graft_materialized_count` stash minhash_dedup and the
-    # dedup_components query set) — the threshold probe then runs zero
-    # jobs instead of re-counting the cached list.
-    known_count = (getattr(pairs, "_graft_materialized_count", None)
-                   if edges_ready else None)
+    # `known_edge_count`: an edges_ready caller whose pair list was
+    # materialized by an eager count hands that count over, so the
+    # threshold probe runs zero jobs instead of re-counting the list.
+    if known_edge_count is not None and not edges_ready:
+        raise ValueError("known_edge_count requires edges_ready=True")
     # `local_threshold` is sized as "64 MB of Arrow int64" — valid only
     # for fixed-width integral/float ids. String ids (a tested path)
     # can be arbitrarily long, so byte-bound them: scale the edge cap
@@ -581,7 +588,7 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
         avg_pair_bytes = float(sample[0]["w"] or 16.0)
         eff_threshold = max(int(local_threshold * 16.0 / avg_pair_bytes),
                             65536)
-    if (known_count if known_count is not None
+    if (known_edge_count if known_edge_count is not None
             else und.count()) <= eff_threshold:
         # Arrow-collect the edge list: a foreign session (the driver's)
         # may have Arrow off, and the row-at-a-time fallback on a

@@ -165,7 +165,9 @@ def fit_single(lag: np.ndarray, gamma: np.ndarray, sigma: np.ndarray,
     k = 2 * n_comp + (1 if nugget else 0)
     if lag.size < k + 2:
         return {"aic": math.inf, "params": [], "cost": math.inf}
-    rng = np.random.RandomState(seed * 1000 + init_id)
+    # numpy seeds must lie in [0, 2**32): fold larger seeds in, leaving
+    # every seed already in range (and so every existing fit) unchanged
+    rng = np.random.RandomState((seed * 1000 + init_id) % 2**32)
     jitter = 0.0 if init_id == 0 else 0.4
     p0 = _initial_params(lag, gamma, n_comp, nugget, jitter, rng)
     lo = np.full(p0.shape, 1e-10)
@@ -258,7 +260,7 @@ def bootstrap_fit(spark: SparkSession, vario_pdf: pd.DataFrame, n_comp: int,
     def run_reps(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
         for rep in pdf["id"]:
-            rng = np.random.RandomState(seed + 100_000 + int(rep))
+            rng = np.random.RandomState((seed + 100_000 + int(rep)) % 2**32)
             g_syn = gamma + rng.standard_normal(gamma.size) * gstd
             r = fit_single(lag, g_syn, sigma, n_comp, nugget, 0, seed)
             for j, v in enumerate(r["params"]):
@@ -284,7 +286,7 @@ def cross_validate(spark: SparkSession, vario_pdf: pd.DataFrame, n_comp: int,
     gstd = (vario_pdf["gamma_std"].to_numpy(np.float64)
             if "gamma_std" in vario_pdf else np.full_like(lag, np.nan))
     sigma = _weights(sigma_type, lag, gstd)
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(seed % 2**32)
     fold_of = rng.permutation(lag.size) % k_folds
 
     def run_fold(pdf: pd.DataFrame) -> pd.DataFrame:

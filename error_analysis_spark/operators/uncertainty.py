@@ -115,7 +115,8 @@ def _part_plan(n: int) -> list[tuple[int, int]]:
 def _sample_part(part: int, want: int, seed: int, rings, bounds):
     """One part's rejection-sampled points (the single RNG-stream owner)."""
     minx, miny, maxx, maxy = bounds
-    rng = np.random.RandomState(seed + 7919 * part)
+    # folded into numpy's [0, 2**32) seed range; in-range seeds unchanged
+    rng = np.random.RandomState((seed + 7919 * part) % 2**32)
     xs, ys = [], []
     got = 0
     drawn = 0

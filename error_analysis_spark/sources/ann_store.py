@@ -249,8 +249,8 @@ def query_ivfpq(spark: SparkSession, path: str, query_vec: list[float],
         raise ValueError(
             f"shortlist={shortlist}: the rerank tier inlines every "
             f"shortlist id into the pruned scan's isin() plan; cap is "
-            f"10000 (recall saturates far below it — see "
-            f"bench_ann_recall.py)")
+            f"10000 (recall saturates far below it — see the round-9 "
+            f"adversarial ANN recall probe in BASELINE.md)")
     q = np.asarray(query_vec, dtype=np.float64)
     q = q / max(np.linalg.norm(q), 1e-300)
     cents = {int(r["list_id"]): np.asarray(r["center"])

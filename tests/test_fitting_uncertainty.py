@@ -228,3 +228,25 @@ def test_uniform_points_deterministic(spark):
     assert len(a) == 5000
     assert np.allclose(np.sort(a["x"].to_numpy()), np.sort(b["x"].to_numpy()))
     assert a["x"].between(0, 1000).all() and a["y"].between(0, 600).all()
+
+
+def test_large_seeds_fold_into_numpy_range():
+    """numpy seeds must lie in [0, 2**32). Seeds whose derived stream
+    seed overflows that range are folded into it instead of raising;
+    a seed that differs from an in-range one by a multiple of 2**32
+    draws that seed's exact streams."""
+    cv = _clean_variogram()
+    lag, gamma = cv["lag"].to_numpy(), cv["gamma_mean"].to_numpy()
+    sigma = cv["gamma_std"].to_numpy()
+    big = 3_000_000_000  # seed * 1000 + init_id overflowed in fit_single
+    fit = FT.fit_single(lag, gamma, sigma, 1, True, 1, big)
+    assert np.isfinite(fit["aic"])
+    assert FT.fit_single(lag, gamma, sigma, 1, True, 1, 42 + 2**32) \
+        == FT.fit_single(lag, gamma, sigma, 1, True, 1, 42)
+    # seed + 1 (the second point stream) overflowed at 2**32 - 1
+    assert UN.estimate_monte_carlo_np(RECT, SILLS, RANGES, NUGGET,
+                                      n_pairs=2000, seed=2**32 - 1) > 0
+    assert UN.estimate_monte_carlo_np(RECT, SILLS, RANGES, NUGGET,
+                                      n_pairs=2000, seed=big + 2**32) \
+        == UN.estimate_monte_carlo_np(RECT, SILLS, RANGES, NUGGET,
+                                      n_pairs=2000, seed=big)

@@ -43,7 +43,7 @@ def test_analyze_pair_recovers_truth(spark):
         assert 0 < v < 0.5
 
 
-def test_analyze_pair_chain_is_one_lazy_dag(spark):
+def test_analyze_pair_chain_is_one_lazy_dag(spark, no_jobs):
     """E3 relational spine: building the chain runs ZERO Spark jobs
     (everything defers to the caller's action), the plan never falls
     back to a CartesianProduct (the bias/centers cross joins are 1-row
@@ -58,12 +58,9 @@ def test_analyze_pair_chain_is_one_lazy_dag(spark):
     g = GridSpec("g", 60, 60, fx.truth["x0"], fx.truth["y0"],
                  fx.truth["res"])
 
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    chain = analyze_pair_chain(ref, cmp_, g, g, max_lag=20.0,
-                               bin_width=5.0, k_centers=10)
-    jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-    assert jobs_after == jobs_before, "chain construction ran Spark jobs"
+    with no_jobs():
+        chain = analyze_pair_chain(ref, cmp_, g, g, max_lag=20.0,
+                                   bin_width=5.0, k_centers=10)
 
     plan = chain._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

@@ -51,7 +51,7 @@ def test_block_cosine_pairs_distinct_and_cc_parity(spark):
     """dedup_components (round 12) asserts edges_ready for the
     blocked-GEMM pair list: (a) the pair list is distinct by
     construction, (b) connected_components over it with
-    edges_ready=True (+ the stashed count) labels identically to the
+    edges_ready=True (+ known_edge_count) labels identically to the
     default dedup+checkpoint path."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from error_analysis_spark.extensions import dedup as DD
@@ -62,25 +62,26 @@ def test_block_cosine_pairs_distinct_and_cc_parity(spark):
     n = pairs.count()
     assert n == pairs.select("id_a", "id_b").distinct().count()
     assert n > 0
-    # round 12: the adaptive block count (n_blocks=None) is a pure
-    # performance parameter — identical pair list at any block count
-    adaptive = SIM.block_cosine_pairs(emb, threshold=0.35)
-    assert (sorted(map(tuple, adaptive.collect()))
+    # the block count is a pure performance parameter — identical pair
+    # list at the default n_blocks=8
+    default = SIM.block_cosine_pairs(emb, threshold=0.35)
+    assert (sorted(map(tuple, default.collect()))
             == sorted(map(tuple, pairs.collect())))
 
     verts = emb.select(F.col("vec_id").alias("id"))
     ready = pairs.persist()
-    ready._graft_materialized_count = ready.count()
+    n_ready = ready.count()
 
     def labels(p, **kw):
         return sorted((r.id, r.component) for r in
                       DD.connected_components(p, verts, **kw).collect())
 
     base = labels(pairs)
-    assert labels(ready, edges_ready=True) == base
-    # a stashed count must not change the labeling on the distributed
+    assert labels(ready, edges_ready=True, known_edge_count=n_ready) == base
+    # a known count must not change the labeling on the distributed
     # path either (threshold 0 forces it)
-    assert labels(ready, edges_ready=True, local_threshold=0) == base
+    assert labels(ready, edges_ready=True, known_edge_count=n_ready,
+                  local_threshold=0) == base
     ready.unpersist()
 
 
@@ -157,8 +158,8 @@ def test_lsh_topk_pinned_unchanged(spark):
 
 
 def test_minhash_count_stash_matches_true_count(spark):
-    """minhash_dedup stashes its eager result count for the CC
-    threshold probe — the stash must equal the true row count."""
+    """minhash_dedup's eager result count, handed to the CC threshold
+    probe as known_edge_count, must equal the true row count."""
     docs = spark.createDataFrame(pd.DataFrame({
         "doc_id": range(8),
         "text": ["the quick brown fox jumps over the lazy dog",
@@ -170,6 +171,9 @@ def test_minhash_count_stash_matches_true_count(spark):
                  "short one",
                  "short one two"]}))
     from error_analysis_spark.extensions import dedup as DD
-    pairs = DD.minhash_dedup(docs, num_perm=16, bands=4, threshold=0.35)
-    assert pairs._graft_materialized_count == pairs.count()
+    pairs, n_pairs = DD._minhash_pairs(docs, "text", "doc_id", 16, 4, 0.35)
+    assert n_pairs == pairs.count() > 0
+    # identical docs collide in every band: the planted exact duplicate
+    # (0, 3) is always found
+    assert (0, 3, 1.0) in {tuple(r) for r in pairs.collect()}
     pairs.unpersist()

@@ -177,7 +177,9 @@ def test_grouped_quantiles_matches_sorted_pick(spark):
     df = spark.createDataFrame(rows, ["grp", "value"])
     from error_analysis_spark.extensions.sketches import grouped_quantiles
     out = grouped_quantiles(df, "grp", "value", qs=(0.25, 0.5, 0.9))
-    got = {(r["grp"], r["q"]): r["v"] for r in out.collect()}
+    rows_out = out.collect()
+    assert len(rows_out) == 3 * 3  # one row per (group, q)
+    got = {(r["grp"], r["q"]): r["v"] for r in rows_out}
     by_g = {}
     for g, v in rows:
         by_g.setdefault(g, []).append(v)
@@ -283,6 +285,7 @@ def test_robust_outliers_pandas_parity(spark):
     df = spark.createDataFrame(pdf)
     from error_analysis_spark.extensions.sketches import robust_outliers
     out = robust_outliers(df, "g", "v").toPandas().set_index("g")
+    assert sorted(out.index) == ["a", "b"]  # one row per group
     for g, sub in pdf.groupby("g"):
         fp = np.round(sub.v * 100).astype(np.int64)
         n = len(fp)
@@ -580,8 +583,9 @@ def test_drift_psi_zero_when_identical(spark):
     vals = [10, 80, 200, 400, 900, 900]
     rows = [(g, v) for g in ("a", "b") for v in vals]
     df = spark.createDataFrame(rows, ["source", "n_chars"])
-    out = {r["source"]: r["psi"]
-           for r in distribution_drift(df).collect()}
+    got = distribution_drift(df).collect()
+    assert len(got) == 2  # one row per group
+    out = {r["source"]: r["psi"] for r in got}
     assert set(out) == {"a", "b"}
     assert out["a"] == 0.0 and out["b"] == 0.0
 
@@ -672,6 +676,13 @@ def test_anomaly_sigma_calibration_nonzero_variance(spark):
     assert ("hot", "2024-01-29") in flagged, out
     assert ("mild", "2024-01-29") not in flagged, out
     assert len(flagged) == 1, out
+    # ranked mode returns exactly top_k of the 30 eligible cells, the
+    # +4 sigma spike first
+    ranked = anomaly_days(df, trailing_days=28, z=3, min_baseline=14,
+                          top_k=10).collect()
+    assert len(ranked) == 10, ranked
+    assert (ranked[0]["event_type"], str(ranked[0]["day"])) \
+        == ("hot", "2024-01-29"), ranked
 
 
 def test_centroid_eval_beats_chance_and_is_partition_stable(spark):
@@ -701,7 +712,9 @@ def test_trend_slope_recovers_exact_line(spark):
             for d in range(50)] + \
            [("flat", base + timedelta(days=d), 7.0) for d in range(50)]
     df = spark.createDataFrame(rows, ["event_type", "ts", "value"])
-    out = {r["event_type"]: r for r in trend_slope(df).collect()}
+    got = trend_slope(df).collect()
+    assert len(got) == 2  # one row per key
+    out = {r["event_type"]: r for r in got}
     assert abs(out["lin"]["slope_per_day"] - 2.0) < 1e-6, out
     assert abs(out["lin"]["pearson_r"] - 1.0) < 1e-6, out
     # zero value-variance: slope 0, correlation undefined (NULL, not

@@ -72,7 +72,7 @@ def test_chain_multi_a5_consistent_with_per_run(spark):
         assert abs(mean.loc[b, "v4"] - grp.n.mean()) < 1e-4
 
 
-def test_lazy_sampler_per_run_counts(spark):
+def test_lazy_sampler_per_run_counts(spark, no_jobs):
     """sample_pixels_multi_lazy draws the exact n_target per run with
     no driver round-trips (construction runs zero jobs) and distinct
     per-run membership (run-salted hash)."""
@@ -87,10 +87,8 @@ def test_lazy_sampler_per_run_counts(spark):
         (F.floor(F.col("id") / 20) + 0.5).alias("y"),
         F.col("id").cast("double").alias("value"))
     params = VariogramParams(max_samples=50, samples_per_area=1e9, seed=7)
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup() or [])
-    samp = sample_pixels_multi_lazy(px, params, res=1.0, n_runs=3)
-    assert len(tracker.getJobIdsForGroup() or []) == jobs_before
+    with no_jobs():
+        samp = sample_pixels_multi_lazy(px, params, res=1.0, n_runs=3)
     pdf = samp.toPandas()
     counts = pdf.groupby("run").sample_id.agg(["count", "nunique"])
     assert (counts["count"] == 50).all() and (counts["nunique"] == 50).all()
@@ -133,7 +131,7 @@ def test_cachereg_scoped_releases_inner_keeps_outer(spark):
     assert not outer.storageLevel.useMemory
 
 
-def test_analyze_pair_chain_multi_is_one_lazy_dag(spark):
+def test_analyze_pair_chain_multi_is_one_lazy_dag(spark, no_jobs):
     """The multi-run chain keeps the E3 laziness contract: building it
     runs ZERO Spark jobs (all three pins — zoned DoD, samples, per-run
     bins — are lazy persists), the plan never falls back to a
@@ -156,13 +154,10 @@ def test_analyze_pair_chain_multi_is_one_lazy_dag(spark):
             .withColumn("y", F.lit(g.y0) - (F.col("row") + 0.5) * g.res))
 
     cachereg.release_tracked()
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    chain = analyze_pair_chain_multi(mk(ga), mk(gb), ga, gb, n_runs=3,
-                                     max_lag=12.0, bin_width=4.0,
-                                     min_pairs=5)
-    jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-    assert jobs_after == jobs_before, "chain construction ran Spark jobs"
+    with no_jobs():
+        chain = analyze_pair_chain_multi(mk(ga), mk(gb), ga, gb, n_runs=3,
+                                         max_lag=12.0, bin_width=4.0,
+                                         min_pairs=5)
     plan = chain._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 
